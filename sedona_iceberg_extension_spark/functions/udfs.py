@@ -118,12 +118,11 @@ def st_geomfromwkb(wkb: pd.Series) -> pd.Series:
 @pandas_udf(_BIN)
 def st_polygonfromenvelope(xmin: pd.Series, ymin: pd.Series,
                            xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-    out = []
-    for a, b, c, d in zip(xmin, ymin, xmax, ymax):
-        if a is None or b is None or c is None or d is None:
-            out.append(None)
-        else:
-            out.append(to_wkb(Geometry.box(float(a), float(b), float(c), float(d))))
+    # NULL when any corner is NULL or NaN, as for ST_Point (Arrow hands a
+    # NULL double over as NaN, so the two cannot be told apart here)
+    missing = pd.isna(xmin) | pd.isna(ymin) | pd.isna(xmax) | pd.isna(ymax)
+    out = [None if m else to_wkb(Geometry.box(float(a), float(b), float(c), float(d)))
+           for m, a, b, c, d in zip(missing, xmin, ymin, xmax, ymax)]
     return pd.Series(out, dtype=object)
 
 

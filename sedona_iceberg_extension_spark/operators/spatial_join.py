@@ -25,6 +25,7 @@ broadcast path moves only the small side.
 
 from __future__ import annotations
 
+from collections import OrderedDict
 from typing import Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -461,18 +462,42 @@ def _stamp_row_id(df: DataFrame, exclude: tuple = ()) -> DataFrame:
             eager=True)
 
 
+class _LRUCache(OrderedDict):
+    """Bounded map that evicts its least recently used entry when a new
+    key arrives at capacity (a long session keeps caching its recent join
+    shapes instead of freezing on the first ``cap`` keys)."""
+
+    def __init__(self, cap: int):
+        super().__init__()
+        self.cap = cap
+
+    def lookup(self, key):
+        if key not in self:
+            return None
+        self.move_to_end(key)
+        return self[key]
+
+    def admit(self, key, value) -> None:
+        self[key] = value
+        self.move_to_end(key)
+        if len(self) > self.cap:
+            self.popitem(last=False)
+
+
 # session-lifetime cache of sample-driven grid sizes, keyed by the
 # canonicalized (semantic) plan hashes of both join inputs: repeated
 # executions of the same join skip the stats job entirely (the same
 # derived-statistics caching Spark applies to relation stats).  Stale only
 # if the underlying files change within one session — the same staleness
-# window Spark's own cached file listings have.
-_GRID_SIZE_CACHE: dict = {}
+# window Spark's own cached file listings have; any positive grid size is
+# exact, so a stale entry costs balance, never rows.
+_GRID_SIZE_CACHE = _LRUCache(256)
 
 
 # session-lifetime cache of per-SIDE envelope statistics, keyed by the
-# OPTIMIZED plan hash of the side's stats frame (round 16, guide §5)
-_ENV_STATS_CACHE: dict = {}
+# OPTIMIZED plan hash of the side's stats frame (round 16, guide §5);
+# same staleness trade as _GRID_SIZE_CACHE
+_ENV_STATS_CACHE = _LRUCache(512)
 
 
 def _cached_grid_size(level1_key, lstats_fn, rstats_fn, d: float) -> float:
@@ -495,8 +520,10 @@ def _cached_grid_size(level1_key, lstats_fn, rstats_fn, d: float) -> float:
     driver-only work (stats-frame build + optimize).  At 100 TB each
     side's stats job is a full scan of that input, so every hit saves
     real work, not just dispatch latency."""
-    if level1_key is not None and level1_key in _GRID_SIZE_CACHE:
-        return _GRID_SIZE_CACHE[level1_key]
+    if level1_key is not None:
+        cached = _GRID_SIZE_CACHE.lookup(level1_key)
+        if cached is not None:
+            return cached
     lstats, rstats = lstats_fn(), rstats_fn()
 
     def _h(df):
@@ -505,8 +532,8 @@ def _cached_grid_size(level1_key, lstats_fn, rstats_fn, d: float) -> float:
         except Exception:
             return None
     hl, hr = _h(lstats), _h(rstats)
-    ls = _ENV_STATS_CACHE.get(hl) if hl is not None else None
-    rs = _ENV_STATS_CACHE.get(hr) if hr is not None else None
+    ls = _ENV_STATS_CACHE.lookup(hl) if hl is not None else None
+    rs = _ENV_STATS_CACHE.lookup(hr) if hr is not None else None
     if ls is None and rs is None:
         row = lstats.crossJoin(rstats).first()
         ls = {k: row[f"l{k}"] for k in ("w", "h", "W", "H")}
@@ -517,13 +544,13 @@ def _cached_grid_size(level1_key, lstats_fn, rstats_fn, d: float) -> float:
     elif rs is None:
         row = rstats.first()
         rs = {k: row[f"r{k}"] for k in ("w", "h", "W", "H")}
-    if hl is not None and len(_ENV_STATS_CACHE) < 512:
-        _ENV_STATS_CACHE[hl] = ls
-    if hr is not None and len(_ENV_STATS_CACHE) < 512:
-        _ENV_STATS_CACHE[hr] = rs
+    if hl is not None:
+        _ENV_STATS_CACHE.admit(hl, ls)
+    if hr is not None:
+        _ENV_STATS_CACHE.admit(hr, rs)
     grid_size = _derive_grid_size(ls, rs, d)
-    if level1_key is not None and len(_GRID_SIZE_CACHE) < 256:
-        _GRID_SIZE_CACHE[level1_key] = grid_size
+    if level1_key is not None:
+        _GRID_SIZE_CACHE.admit(level1_key, grid_size)
     return grid_size
 
 

@@ -40,6 +40,17 @@ residual WHERE.  Iterating the pass plans multi-relation comma chains
 (``FROM a, b, c WHERE ST_p(..) AND ST_q(..)``) one join at a time, with
 later predicates resolving through the pair view's alias-struct columns.
 
+**SQL-text views** — ``CREATE TEMP VIEW v AS SELECT ..., ST_Point(a, b)
+AS geo FROM t`` — hold constructor-built geometry with neither the shape
+hint nor the ``geo_env`` struct that ``with_point_geometry`` /
+``with_box_geometry`` give a DataFrame, so a join over them would build
+every envelope, distance and containment test in Python.  When such a view
+is a join side, the join reads its *twin* instead (:func:`_view_twin`):
+the view's own SELECT text with the hint on ``geo`` and a native
+``geo_env`` appended, so the statement grid join and the range-predicate
+rewrite plan it with no Python.  The twin's ``geo_env`` is marked hidden
+and never surfaces through ``*`` or ``alias.*``.
+
 Statements with no spatial equi-theta join — or shapes this detector does
 not recognize — fall through to ``spark.sql`` verbatim: the registered ST_*
 UDFs still evaluate them correctly, just without the planner upgrade (the
@@ -52,6 +63,7 @@ from __future__ import annotations
 import re
 from typing import List, NamedTuple, Optional, Tuple
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -193,14 +205,177 @@ def _resolve_geom(df: DataFrame, side_alias: str, arg_alias: str,
     return None
 
 
+# column metadata marking a field the front door added for planning only;
+# star expansion skips it
+_HIDDEN_MD = "sql_join_hidden"
+# column metadata marking a shape hint a twin stamped; it is cleared from
+# the statement's output (_drop_twin_hints)
+_TWIN_MD = "sql_join_twin"
+
+_CTOR_RE = re.compile(r"^(?P<fn>ST_Point|ST_PolygonFromEnvelope)\s*\(",
+                      re.IGNORECASE)
+_ITEM_NAME_RE = re.compile(r"^\s+(?:AS\s+)?`?(?P<name>\w+)`?\s*$",
+                           re.IGNORECASE)
+# top-level words that make adding a column to the SELECT list change
+# the rows (or leave the twin's shape unproven)
+_TWIN_STOP_WORDS = {"DISTINCT", "GROUP", "UNION", "EXCEPT", "INTERSECT",
+                    "MINUS", "PIVOT", "UNPIVOT"}
+
+
+def _toplevel_words(s: str) -> set:
+    """Upper-cased words (runs of letters, digits and ``_``) at paren
+    depth 0, outside quotes and backticks."""
+    words, depth, i, n = set(), 0, 0, len(s)
+    while i < n:
+        c = s[i]
+        if c in "'\"`":
+            j = s.find(c, i + 1)
+            i = n if j < 0 else j + 1
+            continue
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            depth -= 1
+        elif depth == 0 and (c.isalnum() or c == "_"):
+            j = i
+            while j < n and (s[j].isalnum() or s[j] == "_"):
+                j += 1
+            words.add(s[i:j].upper())
+            i = j
+            continue
+        i += 1
+    return words
+
+
+def _view_configs_current(spark: SparkSession, meta) -> bool:
+    """True when every SQL conf the view captured at creation has the same
+    value now, so re-parsing its text means what the view means."""
+    # one round trip for the whole map: entries print as "key -> value",
+    # and conf keys hold no spaces
+    entries = meta.viewSQLConfigs().mkString("\x01")
+    conf = spark._jsparkSession.sessionState().conf()
+    try:
+        for e in filter(None, entries.split("\x01")):
+            k, v = e.split(" -> ", 1)
+            if conf.getConfString(k) != v:
+                return False
+    except Py4JError:                    # a captured key unknown here
+        return False
+    return True
+
+
+def _view_twin(spark: SparkSession, rel: str, view: DataFrame,
+               geo: str) -> Optional[DataFrame]:
+    """The twin of temp view *rel* for a join on its column *geo*, or None
+    when the view does not qualify.  It qualifies when it is defined by SQL
+    text that is one plain SELECT (no DISTINCT, GROUP BY, set operation or
+    pivot) whose top-level item *geo* is ``ST_Point(a, b)`` or
+    ``ST_PolygonFromEnvelope(a, b, c, d)`` over DOUBLE arguments, the view
+    has no ``<geo>_env`` column, its plan is deterministic and the SQL confs
+    it captured still hold.
+
+    The twin is the same SELECT plus a native ``<geo>_env`` struct, with
+    *geo* carrying the ``geom_shape`` hint the DataFrame builders stamp.
+    The struct is NULL exactly where the constructor returns NULL (a NULL
+    or NaN argument); a box's struct holds the least and greatest of its
+    corners, the envelope of the polygon the constructor builds.  Temp
+    views only: a hint on a persisted table would be a promise about rows
+    a later INSERT could break."""
+    env = f"{geo}_env"
+    if not re.fullmatch(r"\w+", rel) \
+            or env.lower() in (c.lower() for c in view.columns):
+        return None
+    raw = spark._jsparkSession.sessionState().catalog().getRawTempView(rel)
+    if not raw.isDefined():
+        return None
+    meta = raw.get().tableMeta()
+    text_opt = meta.viewText()
+    if not text_opt.isDefined():
+        return None                      # built from a DataFrame
+    text = text_opt.get().strip().rstrip(";")
+    hm = re.match(r"\s*SELECT\s+", text, re.IGNORECASE)
+    if not hm or _toplevel_words(text) & _TWIN_STOP_WORDS:
+        return None
+    items_end = _find_toplevel_from(text, hm.end())
+    if items_end is None:
+        items_end = len(text)
+    ctor = None
+    for item in _split_top_level_commas(text[hm.end():items_end]):
+        cm = _CTOR_RE.match(item)
+        if not cm:
+            continue
+        try:
+            args, after = _balanced_args(item, cm.end() - 1)
+        except ValueError:
+            continue
+        nm = _ITEM_NAME_RE.match(item[after:])
+        if nm and nm.group("name").lower() == geo.lower():
+            ctor = (cm.group("fn").lower(), args)
+            break
+    if ctor is None:
+        return None
+    fn, args = ctor
+    if len(args) != (2 if fn == "st_point" else 4):
+        return None
+    if not view._jdf.queryExecution().analyzed().deterministic() \
+            or not _view_configs_current(spark, meta):
+        return None
+
+    a = [f"({x})" for x in args]
+    missing = " OR ".join(f"{x} IS NULL OR isnan({x})" for x in a)
+    if fn == "st_point":
+        shape, (x0, y0, x1, y1) = "points", (a[0], a[1], a[0], a[1])
+    else:
+        shape = "rects"
+        x0, y0 = f"least({a[0]}, {a[2]})", f"least({a[1]}, {a[3]})"
+        x1, y1 = f"greatest({a[0]}, {a[2]})", f"greatest({a[1]}, {a[3]})"
+    env_sql = (f"CASE WHEN {missing} THEN NULL ELSE named_struct("
+               f"'xmin', {x0}, 'ymin', {y0}, 'xmax', {x1}, 'ymax', {y1}) END")
+    twin = spark.sql(f"{text[:items_end].rstrip()}, {env_sql} AS `{env}` "
+                     f"{text[items_end:]}")
+    # same columns and types as the view, plus the DOUBLE env struct the
+    # native conditions assume (other argument types keep today's plan)
+    vs, ts = view.schema, twin.schema
+    if ts.fieldNames() != vs.fieldNames() + [env] \
+            or [f.dataType for f in ts.fields[:-1]] != [f.dataType for f in vs.fields] \
+            or any(f.dataType.typeName() != "double"
+                   for f in ts[env].dataType.fields):
+        return None
+    return twin.select(*[
+        F.col(f"`{c}`").alias(c, metadata={"geom_shape": shape, _TWIN_MD: True})
+        if c == geo
+        else F.col(f"`{c}`").alias(c, metadata={_HIDDEN_MD: True}) if c == env
+        else F.col(f"`{c}`") for c in twin.columns])
+
+
+def _visible_fields(struct: StructType) -> List[str]:
+    return [f.name for f in struct.fields
+            if not (f.metadata or {}).get(_HIDDEN_MD)]
+
+
+def _with_twin(spark: SparkSession, rel: str, res):
+    """Swap a plain join side for its twin (see :func:`_view_twin`) when
+    the view qualifies; any failure keeps the view as it is."""
+    df, geo, tmps = res
+    if tmps:
+        return res                       # a prior pair view's alias struct
+    try:
+        twin = _view_twin(spark, rel, df, geo)
+    except Exception:
+        twin = None
+    return res if twin is None else (twin, geo, tmps)
+
+
 def plan_spatial_join_sql(
     spark: SparkSession,
     match: _Match,
     strategy: str = "grid",
+    twins: bool = True,
 ) -> str:
     """Plan the matched spatial join; returns the temp-view name exposing the
     result as one struct column per table alias (prior-join alias structs on
-    the left side pass through unchanged)."""
+    the left side pass through unchanged).  With *twins*, a side that is a
+    qualifying SQL-text view is read through its twin."""
     ldf = spark.table(match.lrel)
     rdf = spark.table(match.rrel)
     l_is_pair_view = match.lrel.startswith(_VIEW_PREFIX)
@@ -232,6 +407,9 @@ def plan_spatial_join_sql(
                 f"join aliases are {match.lalias}/{match.ralias}")
         predicate = inv
 
+    if twins:
+        left_res = _with_twin(spark, match.lrel, left_res)
+        right_res = _with_twin(spark, match.rrel, right_res)
     ldf2, lgeo, ltmps = left_res
     rdf2, rgeo, _ = right_res
 
@@ -293,23 +471,7 @@ def _has_toplevel_or(s: str) -> bool:
     top-level OR is NOT a pure conjunction — removing one \"conjunct\" from
     it (the comma-join rewrite) would silently change semantics
     (``ST_pred AND x OR z`` parses as ``(ST_pred AND x) OR z``)."""
-    depth, i, n = 0, 0, len(s)
-    while i < n:
-        c = s[i]
-        if c == "'":
-            i += 1
-            while i < n and s[i] != "'":
-                i += 1
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (depth == 0 and c in "oO" and s[i:i + 2].upper() == "OR"
-              and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-              and (i + 2 >= n or not (s[i + 2].isalnum() or s[i + 2] == "_"))):
-            return True
-        i += 1
-    return False
+    return "OR" in _toplevel_words(s)
 
 
 def _parse_comma_from(sql: str):
@@ -344,7 +506,7 @@ def _parse_comma_from(sql: str):
 
 
 def _rewrite_comma_join(spark: SparkSession, sql: str,
-                        strategy: str) -> Optional[str]:
+                        strategy: str, twins: bool = True) -> Optional[str]:
     """Plan ONE comma-join spatial predicate (the reference App's
     ``FROM a, b WHERE ST_pred(...)`` spelling); returns the rewritten
     statement or None if the shape doesn't apply."""
@@ -397,7 +559,8 @@ def _rewrite_comma_join(spark: SparkSession, sql: str,
                 rt[0], rt[1] or rt[0].rsplit(".", 1)[-1],
                 pred, args, None, "inner")
     try:
-        view = plan_spatial_join_sql(spark, mt, strategy=strategy)
+        view = plan_spatial_join_sql(spark, mt, strategy=strategy,
+                                     twins=twins)
     except Exception:
         return None
     _VIEW_ALIAS_ORDER[view] = [t[1] or t[0].rsplit(".", 1)[-1]
@@ -611,7 +774,7 @@ def _pair_view_star_items(spark: SparkSession, rel: str) -> List[str]:
         fld = schema[name]
         if isinstance(fld.dataType, StructType):
             items += [f"`{fld.name}`.`{f}` AS `{f}`"
-                      for f in fld.dataType.fieldNames()]
+                      for f in _visible_fields(fld.dataType)]
         else:
             items.append(f"`{fld.name}`")
     return items
@@ -666,7 +829,7 @@ def _expand_star_over_views(spark: SparkSession, sql: str) -> str:
             if alias in df.columns and isinstance(df.schema[alias].dataType,
                                                   StructType):
                 return [f"`{alias}`.`{f}` AS `{f}`"
-                        for f in df.schema[alias].dataType.fieldNames()]
+                        for f in _visible_fields(df.schema[alias].dataType)]
         return None
 
     changed, out = False, []
@@ -703,22 +866,65 @@ def _inject_where(tail: str, extra: str) -> str:
     return f"{tail[:sm.start()]} WHERE {extra} {tail[sm.start():]}"
 
 
+def _bare_star_over_hidden(spark: SparkSession, sql: str) -> bool:
+    """True when the select list kept a bare ``*`` (star expansion could
+    not enumerate the FROM clause) over a pair view holding hidden twin
+    fields, which would surface inside the alias structs."""
+    hm = _SELECT_HEAD_RE.match(sql)
+    if not hm:
+        return False
+    from_idx = _find_toplevel_from(sql, hm.end())
+    if from_idx is None or "*" not in _split_top_level_commas(
+            sql[hm.end():from_idx]):
+        return False
+    for rel, _ in _relation_list(sql):
+        if rel.startswith(_VIEW_PREFIX):
+            for fld in spark.table(rel).schema.fields:
+                if isinstance(fld.dataType, StructType) and \
+                        _visible_fields(fld.dataType) != fld.dataType.fieldNames():
+                    return True
+    return False
+
+
+def _drop_twin_hints(df: DataFrame) -> DataFrame:
+    """Clear the metadata a twin stamped on the statement's output columns.
+    Its shape hint describes the view's rows as read now; a CTAS persisting
+    it would promise that shape for every row a later INSERT adds."""
+    fields = df.schema.fields
+    if not any((f.metadata or {}).get(_TWIN_MD) for f in fields):
+        return df
+    empty = df.sparkSession._jvm.org.apache.spark.sql.types.Metadata.empty()
+    # positional names: a star output may repeat a column name
+    tmp = df.toDF(*[f"_c{i}" for i in range(len(fields))])
+    return tmp.select(*[
+        Column(getattr(F.col(f"_c{i}")._jc, "as")(f.name, empty))
+        if (f.metadata or {}).get(_TWIN_MD) else F.col(f"_c{i}").alias(f.name)
+        for i, f in enumerate(fields)])
+
+
 def spatial_sql(spark: SparkSession, sql: str, strategy: str = "grid") -> DataFrame:
     """Run a SQL statement, planning every recognized ``JOIN ... ON ST_pred``
     (including chains of them) through the distributed spatial join instead
     of Spark's default BroadcastNestedLoopJoin-over-UDF.
 
     Unrecognized statements run unchanged (correct, unoptimized)."""
+    return _plan_statement(spark, sql, strategy, twins=True)
+
+
+def _plan_statement(spark: SparkSession, sql: str, strategy: str,
+                    twins: bool) -> DataFrame:
+    original = sql
     for _ in range(8):  # bounded chain of spatial joins per statement
         match = _find_spatial_join(sql)
         if match is not None:
             try:
-                view = plan_spatial_join_sql(spark, match, strategy=strategy)
+                view = plan_spatial_join_sql(spark, match, strategy=strategy,
+                                             twins=twins)
             except Exception:
                 # fall back to vanilla evaluation — the ST_* UDFs are
                 # registered, so the unrewritten statement still computes
                 # the right answer
-                return spark.sql(sql)
+                return _drop_twin_hints(spark.sql(sql))
             start, end = match.span
             head, tail = sql[:start], sql[end:]
             if tail and not tail[0].isspace():
@@ -728,13 +934,17 @@ def spatial_sql(spark: SparkSession, sql: str, strategy: str = "grid") -> DataFr
             sql = f"{head}FROM {view}{tail}"
             continue
         # the reference App's comma-join spelling: FROM a, b WHERE ST_pred
-        rewritten = _rewrite_comma_join(spark, sql, strategy)
+        rewritten = _rewrite_comma_join(spark, sql, strategy, twins)
         if rewritten is None:
             break
         sql = rewritten
     # SELECT * over a pair view must keep returning flat columns
     sql = _expand_star_over_views(spark, sql)
+    if twins and _bare_star_over_hidden(spark, sql):
+        return _plan_statement(spark, original, strategy, twins=False)
     # Tier-B face for SQL text: constant-envelope range predicates over
     # shape-hinted geometry go native (no Python, filter reaches the scan)
     sql = _rewrite_range_predicates(spark, sql)
+    if twins and _VIEW_PREFIX in sql:
+        return _drop_twin_hints(spark.sql(sql))
     return spark.sql(sql)

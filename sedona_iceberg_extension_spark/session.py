@@ -121,6 +121,16 @@ def get_session(app_name: str = "sedona-iceberg-extension-spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
+        # PySpark's worker calls importlib.invalidate_caches() at the start
+        # of every task, and on Python 3.11 that re-reads the directory of
+        # every cached zip importer (pyspark.zip through a dozen package
+        # importers, the spark-core jar and the py4j zip twice each):
+        # measured 205 ms per task, 4-vCPU host, before any UDF runs.  This
+        # daemon module wraps pyspark.daemon and re-reads an archive only
+        # when its stat signature changed (worker_daemon.py), so addPyFile
+        # archives still load.
+        .config("spark.python.daemon.module",
+                "sedona_iceberg_extension_spark.worker_daemon")
         # driver testdata writes TIMESTAMP(NANOS) parquet — read as long,
         # converted back to timestamp by sources.tables.load_tables
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -687,3 +687,30 @@ def test_grid_size_cache_hits_across_projection_variants(spark, sf_dir):
     assert len(st.getJobIdsForGroup()) == jobs_before
     SJ._GRID_SIZE_CACHE.clear()
     SJ._ENV_STATS_CACHE.clear()
+
+
+@pytest.mark.parametrize("name", ["_GRID_SIZE_CACHE", "_ENV_STATS_CACHE"])
+def test_sizing_caches_evict_least_recently_used(name):
+    """A full sizing cache admits a new key by evicting its least recently
+    used entry; a key read just before the admission survives."""
+    import importlib
+
+    SJ = importlib.import_module(
+        "sedona_iceberg_extension_spark.operators.spatial_join")
+    cache = getattr(SJ, name)
+    saved = list(cache.items())
+    try:
+        cache.clear()
+        for k in range(cache.cap):
+            cache.admit(("k", k), float(k + 1))
+        assert len(cache) == cache.cap
+        assert cache.lookup(("k", 0)) == 1.0      # oldest entry, just used
+        cache.admit(("new",), 99.0)
+        assert len(cache) == cache.cap
+        assert cache.lookup(("new",)) == 99.0
+        assert cache.lookup(("k", 0)) == 1.0
+        assert ("k", 1) not in cache              # the least recently used
+    finally:
+        cache.clear()
+        for k, v in saved:
+            cache.admit(k, v)

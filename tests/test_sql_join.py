@@ -352,3 +352,149 @@ def test_comma_join_matches_vanilla_random(spark):
     planned = [(r.id_p, r.id_b) for r in spatial_sql(spark, sql).collect()]
     vanilla = [(r.id_p, r.id_b) for r in spark.sql(sql).collect()]
     assert planned == vanilla and len(vanilla) > 0
+
+
+# -- SQL-text views: joins read the view's twin (native envelope, no Python) --
+
+TWIN_BOX = "ST_PolygonFromEnvelope(-5.0, -5.0, 5.0, 5.0)"
+
+
+@pytest.fixture()
+def twin_views(spark):
+    """SQL-text views over random integer coordinates (boundary ties), with
+    NULL and NaN coordinates and boxes whose corners come in either order."""
+    import random
+
+    rnd = random.Random(7)
+    nan = float("nan")
+
+    def coord():
+        r = rnd.random()
+        return None if r < 0.05 else nan if r < 0.1 else float(rnd.randint(-10, 10))
+
+    spark.createDataFrame(
+        [(i, coord(), coord()) for i in range(160)],
+        "id INT, x DOUBLE, y DOUBLE").createOrReplaceTempView("tw_pts_src")
+    spark.createDataFrame(
+        [(i, coord(), coord(), coord(), coord()) for i in range(40)],
+        "id INT, a DOUBLE, b DOUBLE, c DOUBLE, d DOUBLE") \
+        .createOrReplaceTempView("tw_box_src")
+    spark.sql("CREATE OR REPLACE TEMP VIEW tw_pts AS "
+              "SELECT id, ST_Point(x, y) AS geo FROM tw_pts_src")
+    spark.sql("CREATE OR REPLACE TEMP VIEW tw_pts2 AS "
+              "SELECT id AS id2, ST_Point(x, y) AS geo FROM tw_pts_src "
+              "WHERE id % 2 = 0")
+    spark.sql("CREATE OR REPLACE TEMP VIEW tw_boxes AS "
+              "SELECT id, ST_PolygonFromEnvelope(a, b, c, d) AS geo "
+              "FROM tw_box_src")
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.mark.parametrize("stmt", [
+    "SELECT l.id AS a, r.id2 AS b FROM tw_pts l JOIN tw_pts2 r "
+    "ON ST_DWithin(l.geo, r.geo, 2.0)",
+    "SELECT b.id AS bid, p.id AS pid FROM tw_boxes b JOIN tw_pts p "
+    "ON ST_Contains(b.geo, p.geo)",
+    "SELECT b.id AS bid, p.id AS pid FROM tw_pts p, tw_boxes b "
+    "WHERE ST_Contains(b.geo, p.geo)",
+    f"SELECT l.id AS id_l, r.id2 AS id_r FROM tw_pts l JOIN tw_pts2 r "
+    f"ON ST_DWithin(l.geo, r.geo, 2.0) "
+    f"WHERE ST_Contains({TWIN_BOX}, l.geo) ORDER BY id_l, id_r",
+])
+def test_twin_join_matches_udf_path(spark, twin_views, stmt):
+    got = spatial_sql(spark, stmt)
+    plan = _plan(got)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    want = _rows(spark.sql(stmt))          # every ST_* evaluated by its UDF
+    assert _rows(got) == want and want
+
+
+def test_twin_template_shape_has_no_python(spark, twin_views):
+    stmt = (f"SELECT l.id AS id_l, r.id2 AS id_r FROM tw_pts l JOIN tw_pts2 r "
+            f"ON ST_DWithin(l.geo, r.geo, 2.0) "
+            f"WHERE ST_Contains({TWIN_BOX}, l.geo) ORDER BY id_l, id_r")
+    df = spatial_sql(spark, stmt)
+    rows = [tuple(r) for r in df.collect()]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan
+    assert rows == [tuple(r) for r in spark.sql(stmt).collect()]
+
+
+def test_twin_env_never_in_star_output(spark, twin_views):
+    on = "ON ST_DWithin(l.geo, r.geo, 2.0)"
+    df = spatial_sql(spark, f"SELECT * FROM tw_pts l JOIN tw_pts2 r {on}")
+    assert df.columns == ["id", "geo", "id2", "geo"]
+    df = spatial_sql(spark, f"SELECT l.* FROM tw_pts l JOIN tw_pts2 r {on}")
+    assert df.columns == ["id", "geo"]
+    df = spatial_sql(spark, "SELECT * FROM tw_pts l, tw_pts2 r "
+                            "WHERE ST_DWithin(l.geo, r.geo, 2.0)")
+    assert df.columns == ["id", "geo", "id2", "geo"]
+    # a trailing non-spatial join leaves * unexpanded (alias structs): the
+    # statement is planned again without twins
+    df = spatial_sql(spark, f"SELECT * FROM tw_pts l JOIN tw_pts2 r {on} "
+                            f"JOIN tw_pts_src s ON l.id = s.id")
+    assert "geo_env" not in df.schema.simpleString()
+    assert df.count() == spark.sql(
+        f"SELECT * FROM tw_pts l JOIN tw_pts2 r {on} "
+        f"JOIN tw_pts_src s ON l.id = s.id").count()
+
+
+@pytest.mark.parametrize("view_sql", [
+    "SELECT id, ST_Point(x, y) AS geo FROM tw_pts_src WHERE id < 80 "
+    "UNION ALL SELECT id, ST_Point(x, y) AS geo FROM tw_pts_src WHERE id >= 80",
+    "SELECT DISTINCT id, ST_Point(x, y) AS geo FROM tw_pts_src",
+    "SELECT id, ST_Point(x, y) AS geo FROM tw_pts_src GROUP BY id, x, y",
+    "SELECT id, ST_Point(x, y) AS geo, "
+    "named_struct('xmin', x, 'ymin', y, 'xmax', x, 'ymax', y) AS geo_env "
+    "FROM tw_pts_src",
+    "SELECT id, ST_Point(id % 21 - 10, id % 7 - 3) AS geo FROM tw_pts_src",
+])
+def test_twin_not_built_for_other_views(spark, twin_views, view_sql):
+    from sedona_iceberg_extension_spark.operators.sql_join import _view_twin
+
+    spark.sql(f"CREATE OR REPLACE TEMP VIEW tw_other AS {view_sql}")
+    assert _view_twin(spark, "tw_other", spark.table("tw_other"), "geo") is None
+    stmt = ("SELECT o.id AS a, r.id2 AS b FROM tw_other o JOIN tw_pts2 r "
+            "ON ST_DWithin(o.geo, r.geo, 2.0)")
+    assert _rows(spatial_sql(spark, stmt)) == _rows(spark.sql(stmt))
+
+
+def test_twin_only_for_sql_text_temp_views(spark, twin_views):
+    from sedona_iceberg_extension_spark.operators.sql_join import _view_twin
+
+    spark.table("tw_pts").createOrReplaceTempView("tw_df_view")
+    assert _view_twin(spark, "tw_df_view", spark.table("tw_df_view"), "geo") is None
+    twin = _view_twin(spark, "tw_boxes", spark.table("tw_boxes"), "geo")
+    assert twin.columns == ["id", "geo", "geo_env"]
+    assert twin.schema["geo"].metadata["geom_shape"] == "rects"
+    # the envelope is NULL exactly where the constructor is
+    rows = twin.selectExpr("id", "geo IS NULL", "geo_env").collect()
+    src = {r.id: r for r in spark.table("tw_box_src").collect()}
+    for r in rows:
+        assert (r[1]) == (r.geo_env is None)
+        if r.geo_env is not None:
+            s = src[r.id]
+            assert tuple(r.geo_env) == (min(s.a, s.c), min(s.b, s.d),
+                                        max(s.a, s.c), max(s.b, s.d))
+
+
+def test_twin_hint_does_not_reach_a_ctas_table(spark, twin_views, tmp_path,
+                                               monkeypatch):
+    """A twin's shape hint describes the view's rows as read now; a table
+    built from a twin join must not persist it as a promise about rows a
+    later INSERT adds."""
+    from sedona_iceberg_extension_spark.session import sql
+
+    monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(tmp_path))
+    stmt = ("SELECT l.id AS id, l.geo AS geo FROM tw_pts l JOIN tw_pts2 r "
+            "ON ST_DWithin(l.geo, r.geo, 2.0)")
+    assert "geom_shape" not in spatial_sql(spark, stmt).schema["geo"].metadata
+    sql(spark, f"CREATE TABLE tw_ctas USING ICEBERG AS {stmt}")
+    try:
+        assert "geom_shape" not in spark.table("tw_ctas").schema["geo"].metadata
+    finally:
+        sql(spark, "DROP TABLE tw_ctas")
