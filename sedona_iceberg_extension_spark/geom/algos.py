@@ -62,7 +62,11 @@ def _seg_intersect(a: Coord, b: Coord, c: Coord, d: Coord) -> bool:
     """Segments ab and cd share at least one point."""
     o1, o2 = _orient(a, b, c), _orient(a, b, d)
     o3, o4 = _orient(c, d, a), _orient(c, d, b)
-    if o1 != o2 and o3 != o4:
+    # A proper crossing needs strictly opposite sides on both lines.  An
+    # orientation of 0 only says |cross| <= EPS, which two short segments
+    # near a common point can reach without touching, so those cases go
+    # through the bounding-box check in _on_segment.
+    if o1 * o2 < 0 and o3 * o4 < 0:
         return True
     return (
         (o1 == 0 and _on_segment(c, a, b))
