@@ -349,11 +349,25 @@ def _wall_spread(steady_tel):
 def _suite_spread(totals):
     """max/min of the TIMED steady suite totals — the dispersion gate over
     the measured quantity itself (see CONTENTION_SUITE_SPREAD: child wall
-    includes fixed priming, which dilutes suite-level dispersion)."""
-    vals = [t for t in totals if t]
-    if len(vals) < 2:
+    includes fixed priming, which dilutes suite-level dispersion).  A 0.0
+    total counts toward the two-total minimum; the ratio is undefined (None)
+    when the smallest total is 0."""
+    vals = [t for t in totals if t is not None]
+    if len(vals) < 2 or min(vals) <= 0:
         return None
     return round(max(vals) / min(vals), 2)
+
+
+def _detail_path():
+    """Absolute path of this run's detail file: ``SPARK_GRAFT_BENCH_DETAIL``
+    when set, else a per-run suffixed name in the cwd, so a run launched
+    from the repo root never overwrites the committed
+    ``bench_detail.json``."""
+    path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
+    if not path:
+        stamp = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
+        path = f"bench_detail.{stamp}-{os.getpid()}.json"
+    return os.path.abspath(path)
 
 
 def _spawn_with_telemetry(extra_argv):
@@ -483,14 +497,10 @@ def main():
     # d/e lost provenance mid-round and the r15 driver run overwrote
     # attempt t's detail post-certification).  The committed copy is
     # refreshed deliberately by copying a chosen run's file in.
-    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL")
-    if not detail_path:
-        stamp = time.strftime("%Y%m%dT%H%M%S", time.gmtime())
-        detail_path = os.path.join(
-            os.getcwd(), f"bench_detail.{stamp}-{os.getpid()}.json")
+    detail_path = _detail_path()
     tracked = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "bench_detail.json")
-    if os.path.abspath(detail_path) == tracked:
+    if detail_path == tracked:
         print("# WARNING: detail path is the git-tracked committed record "
               f"({tracked}) — overwriting a certified artifact; point "
               "SPARK_GRAFT_BENCH_DETAIL elsewhere unless this is "
@@ -535,7 +545,7 @@ def main():
             "warmup_failures_max": _max_present(
                 steady_tel, lambda t: t.get("warmup_failures")),
         },
-        "detail": os.path.basename(detail_path),
+        "detail": detail_path,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     detail = dict(line)

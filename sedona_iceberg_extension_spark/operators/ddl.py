@@ -187,8 +187,9 @@ def _schema_ddl(cols: str) -> str:
 def _align(df: DataFrame, target: SnapshotTable,
            spark: SparkSession) -> DataFrame:
     """Positionally align an insert source to the table schema (names and
-    types), the way SQL INSERT resolves columns."""
-    schema = target.read(spark).schema
+    types), the way SQL INSERT resolves columns.  The schema comes from the
+    table's manifest; no table DataFrame is built."""
+    schema = target.schema(spark)
     if len(df.columns) != len(schema):
         raise ValueError(
             f"INSERT column count {len(df.columns)} != table arity {len(schema)}")
@@ -300,8 +301,8 @@ def describe_table(spark: SparkSession, name: str) -> DataFrame:
     CURRENT logical schema (post-ALTER evolution); the active partition
     spec follows Spark's "# Partition Information" section convention."""
     tbl = _catalog(spark)[name]
-    df = tbl.read(spark)
-    rows = [(f.name, f.dataType.simpleString(), None) for f in df.schema.fields]
+    rows = [(f.name, f.dataType.simpleString(), None)
+            for f in tbl.schema(spark).fields]
     spec = tbl.partition_spec()
     if spec:
         rows.append(("# Partition Information", "", None))

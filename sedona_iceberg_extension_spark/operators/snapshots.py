@@ -10,10 +10,13 @@ module reproduces that mechanism over a plain parquet directory:
 - data files are **immutable** — copy-on-write DML adds new files and
   drops old ones *from the manifest only*;
 - ``_snapshots/v{N}.json`` manifests record the live file set, operation,
-  parent version, and commit timestamp (the manifest is metadata-scale:
-  one name per file, like an Iceberg manifest list);
+  parent version, commit timestamp and the physical schema of the file set
+  (the manifest is metadata-scale: one name per file, like an Iceberg
+  manifest list);
 - readers resolve a manifest (latest by default, any retained version for
-  time travel) and scan exactly its files;
+  time travel) and scan exactly its files, typed by the stored schema, so
+  planning a read opens no file (Iceberg plans scans from table metadata,
+  never from data-file footers);
 - ``rollback`` is a *new* commit whose file set equals an old version's
   (history is append-only, as in Iceberg);
 - ``expire`` removes old manifests and any data file no retained version
@@ -39,10 +42,12 @@ import json
 import os
 import time
 import uuid
-from typing import Dict, List, Optional
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import (Column, DataFrame, Observation, SparkSession,
                          functions as F)
+from pyspark.sql.types import (ArrayType, DataType, MapType, StructField,
+                               StructType)
 
 _SNAP_DIR = "_snapshots"
 
@@ -56,37 +61,112 @@ def _to_col(expr):
     return F.expr(expr) if isinstance(expr, str) else expr
 
 
-def _project_schema(df: DataFrame, ops: List[Dict]) -> DataFrame:
-    """Apply manifest schema ops (ALTER TABLE history) to a raw file-union
-    DataFrame, yielding the table's logical schema — shared by read() and
-    every CoW path (predicates/assignments refer to logical columns)."""
+def _as_written(dt: DataType) -> DataType:
+    """``dt`` as Spark's parquet writer stores it: every field, element and
+    map value nullable, field metadata kept."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _as_written(f.dataType), True,
+                                       f.metadata) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_written(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_written(dt.keyType), _as_written(dt.valueType), True)
+    return dt
+
+
+def _merge_types(left: DataType, right: DataType, path: str = "") -> DataType:
+    """Parquet ``mergeSchema``'s union of two written schemas: ``left``'s
+    fields in order, then ``right``'s new ones in theirs (recursively in
+    structs); any other type mismatch raises, as Spark's merge does."""
+    if isinstance(left, StructType) and isinstance(right, StructType):
+        theirs = {f.name: f.dataType for f in right.fields}
+        fields = [StructField(f.name, _merge_types(
+                      f.dataType, theirs[f.name],
+                      f"{path}.{f.name}" if path else f.name)
+                      if f.name in theirs else f.dataType, True, f.metadata)
+                  for f in left.fields]
+        ours = set(left.names)
+        return StructType(fields + [f for f in right.fields
+                                    if f.name not in ours])
+    if isinstance(left, ArrayType) and isinstance(right, ArrayType):
+        return ArrayType(_merge_types(left.elementType, right.elementType,
+                                      f"{path}.element"), True)
+    if isinstance(left, MapType) and isinstance(right, MapType):
+        return MapType(_merge_types(left.keyType, right.keyType, f"{path}.key"),
+                       _merge_types(left.valueType, right.valueType,
+                                    f"{path}.value"), True)
+    if left != right:
+        raise ValueError(
+            f"cannot merge incompatible types for column {path!r}: "
+            f"{left.simpleString()} and {right.simpleString()}")
+    return left
+
+
+def _logical_columns(physical: StructType, ops: List[Dict]
+                     ) -> List[Tuple[str, DataType, List[str]]]:
+    """The logical columns of a file set whose physical schema is
+    ``physical`` after the manifest schema ops (ALTER TABLE history):
+    ``(name, type, physical sources)`` in table order.  Several sources
+    are coalesced in order; none is a typed NULL (an added column no file
+    carries yet)."""
+    cols = [(f.name, f.dataType, [f.name]) for f in physical.fields]
+
+    def find(name):
+        return next((i for i, c in enumerate(cols) if c[0] == name), None)
+
     for op in ops:
         if op["op"] == "add":
-            phys = op.get("physical", op["name"])
-            if phys != op["name"]:
+            name = op["name"]
+            phys = op.get("physical", name)
+            if phys != name:
                 # column re-added after a drop of the same name: new data
                 # lives under a generation-mangled physical name (parquet
                 # has no field IDs); stale pre-drop values stay hidden
-                if op["name"] in df.columns:
-                    df = df.drop(op["name"])
-                if phys in df.columns:
-                    df = df.withColumnRenamed(phys, op["name"])
-                else:
-                    df = df.withColumn(op["name"],
-                                       F.lit(None).cast(op["type"]))
-            elif op["name"] not in df.columns:
-                df = df.withColumn(op["name"], F.lit(None).cast(op["type"]))
+                if find(name) is not None:
+                    del cols[find(name)]
+                j = find(phys)
+                if j is not None:
+                    cols[j] = (name,) + cols[j][1:]
+                    continue
+            elif find(name) is not None:
+                continue
+            cols.append((name, DataType.fromDDL(op["type"]), []))
         elif op["op"] == "rename":
-            old, new = op["from"], op["to"]
-            if old in df.columns and new in df.columns:
-                df = df.withColumn(
-                    new, F.coalesce(F.col(new), F.col(old))).drop(old)
-            elif old in df.columns:
-                df = df.withColumnRenamed(old, new)
-        elif op["op"] == "drop":
-            if op["name"] in df.columns:
-                df = df.drop(op["name"])
-    return df
+            i, j = find(op["from"]), find(op["to"])
+            if i is not None and j is not None:
+                # files rewritten after the rename carry the new name: the
+                # old files' values fill in, in the column's old position
+                cols[i] = (op["to"], cols[j][1], cols[j][2] + cols[i][2])
+                del cols[j]
+            elif i is not None:
+                cols[i] = (op["to"],) + cols[i][1:]
+        elif op["op"] == "drop" and find(op["name"]) is not None:
+            del cols[find(op["name"])]
+    return cols
+
+
+def _quoted(name: str) -> Column:
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
+def _project_schema(df: DataFrame, ops: List[Dict]) -> DataFrame:
+    """Apply manifest schema ops to a raw file-union DataFrame, yielding
+    the table's logical schema — shared by read() and every CoW path
+    (predicates/assignments refer to logical columns)."""
+    if not ops:
+        return df
+    out = []
+    for name, typ, srcs in _logical_columns(df.schema, ops):
+        if not srcs:
+            c = F.lit(None).cast(typ)
+        elif len(srcs) == 1:
+            c = _quoted(srcs[0])
+        else:
+            c = F.coalesce(*[_quoted(p) for p in srcs])
+            if any(df.schema[p].dataType != typ for p in srcs):
+                c = c.cast(typ)
+        out.append(c.alias(name))
+    return df.select(*out)
 
 
 def _partition_value(fld) -> Column:
@@ -137,13 +217,22 @@ class SnapshotTable:
 
     def _commit(self, files: List[str], operation: str,
                 base_version: Optional[int] = None,
-                extra: Optional[Dict] = None) -> int:
+                extra: Optional[Dict] = None,
+                written: Optional[StructType] = None) -> int:
         """Atomically claim the next version.  ``base_version`` is the
         snapshot this change was computed against: if a concurrent writer
         has committed since (latest != base), or the version-file claim
         itself loses a race, raise :class:`CommitConflictError` — the
         losing writer's data files stay orphaned and are swept by
-        ``expire``, never referenced (Iceberg's failed-commit story)."""
+        ``expire``, never referenced (Iceberg's failed-commit story).
+
+        The stored ``schema`` is the physical schema of the file set.  It
+        is carried forward unless ``extra`` sets it (create, overwrite,
+        rollback, set_current, cherrypick); ``written``, the schema of the
+        files an append or rewrite adds, is merged onto it.  A manifest
+        from before schemas were stored has none, nor do the commits that
+        build on it, until an overwrite: their reads merge the files'
+        footers instead."""
         vs = self.versions()
         latest = vs[-1] if vs else None
         if base_version is not None and latest != base_version:
@@ -164,6 +253,8 @@ class SnapshotTable:
             # on the snapshot); per-file partition tuples follow their
             # files — entries for files no longer live are dropped
             prev = self._manifest(latest)
+            if "schema" in prev:
+                manifest["schema"] = prev["schema"]
             ops = prev.get("schema_ops")
             if ops:
                 manifest["schema_ops"] = ops
@@ -171,14 +262,20 @@ class SnapshotTable:
                 manifest["partition_spec"] = prev["partition_spec"]
             fps = prev.get("file_partitions")
             if fps:
+                live = set(files)
                 manifest["file_partitions"] = {
-                    f: v for f, v in fps.items() if f in set(files)}
+                    f: v for f, v in fps.items() if f in live}
         if extra:
             new_fps = extra.pop("new_file_partitions", None)
             manifest.update(extra)
             if new_fps:
                 manifest["file_partitions"] = {
                     **manifest.get("file_partitions", {}), **new_fps}
+        if manifest.get("schema") is None:
+            manifest.pop("schema", None)
+        elif written is not None:
+            manifest["schema"] = _merge_types(
+                StructType.fromJson(manifest["schema"]), written).jsonValue()
         tmp = os.path.join(self.snap_dir, f".v{v}.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as fh:
             json.dump(manifest, fh)
@@ -198,6 +295,37 @@ class SnapshotTable:
         return [os.path.join(self.path, f)
                 for f in self._manifest(version)["files"]]
 
+    def _scan_physical(self, spark: SparkSession, m: Dict,
+                       paths: Optional[List[str]] = None) -> DataFrame:
+        """The raw (physical-column) DataFrame over ``paths`` (default: all
+        of ``m``'s live files), typed by ``m``'s stored schema: planning it
+        reads no footer and starts no Spark job.  Files that lack a column
+        read it as NULL."""
+        if paths is None:
+            paths = [os.path.join(self.path, f) for f in m["files"]]
+        if "schema" not in m:     # written before manifests stored a schema
+            return spark.read.option("mergeSchema", "true").parquet(*paths)
+        return spark.read.schema(StructType.fromJson(m["schema"])).parquet(
+            *paths)
+
+    def _scan(self, spark: SparkSession, m: Dict,
+              paths: Optional[List[str]] = None) -> DataFrame:
+        """:meth:`_scan_physical` in ``m``'s logical columns (read(), DML
+        predicates and assignments address those)."""
+        return _project_schema(self._scan_physical(spark, m, paths),
+                               m.get("schema_ops", []))
+
+    def schema(self, spark: SparkSession,
+               version: Optional[int] = None) -> StructType:
+        """The table's logical schema as of ``version`` (latest when None),
+        from the manifest alone: its stored schema after its schema ops."""
+        m = self._manifest(version)
+        if "schema" not in m:
+            return self.read(spark, version).schema
+        return StructType([
+            StructField(name, typ, True) for name, typ, _ in _logical_columns(
+                StructType.fromJson(m["schema"]), m.get("schema_ops", []))])
+
     def history(self) -> List[Dict]:
         return [{k: m[k] for k in
                  ("version", "parent", "operation", "timestamp_ms")}
@@ -206,12 +334,11 @@ class SnapshotTable:
 
     # -- data-file helpers --------------------------------------------------
 
-    def _ingest_staged(self, staged: str, collect_partitions: bool = False):
+    def _ingest_staged(self, staged: str) -> Tuple[List[str], Dict]:
         """Move part files from a staging dir into the table dir under
-        unique immutable names; returns their (relative) names — or, with
-        ``collect_partitions``, (names, {name: partition_tuple}) parsed
-        from Hive-style ``_p_<field>=<value>`` directory components the
-        partitioned stage write produced."""
+        unique immutable names; returns their (relative) names and
+        {name: partition_tuple} parsed from Hive-style ``_p_<field>=<value>``
+        directory components the partitioned stage write produced."""
         names, parts = [], {}
         for root, _dirs, fnames in os.walk(staged):
             pvals = {}
@@ -232,29 +359,32 @@ class SnapshotTable:
                         parts[new] = pvals
         import shutil
         shutil.rmtree(staged, ignore_errors=True)
-        return (names, parts) if collect_partitions else names
+        return names, parts
 
-    def _stage(self, df: DataFrame) -> str:
+    def _write(self, df: DataFrame) -> Tuple[List[str], Dict, StructType]:
+        """Write ``df`` as new immutable data files of this table: their
+        names, their partition tuples and their physical schema."""
+        staged, written = self._stage(df)
+        names, parts = self._ingest_staged(staged)
+        return names, parts, written
+
+    def _stage(self, df: DataFrame) -> Tuple[str, StructType]:
         # logical -> physical mapping for re-added columns (see read());
         # inputs carrying physical names already (raw CoW rewrites) no-op
         try:
-            ops = self._manifest().get("schema_ops", [])
+            m = self._manifest()
         except FileNotFoundError:
-            ops = []
-        for op in ops:
+            m = {}
+        for op in m.get("schema_ops", []):
             phys = op.get("physical")
             if (op["op"] == "add" and phys and phys != op["name"]
                     and op["name"] in df.columns):
                 df = df.withColumnRenamed(op["name"], phys)
+        written = _as_written(df.schema)
         staged = os.path.join(os.path.dirname(self.path),
                               f".staged-{uuid.uuid4().hex}")
-        spec = []
-        try:
-            spec = self._manifest().get("partition_spec", [])
-        except FileNotFoundError:
-            pass
         pnames = []
-        for fld in spec:
+        for fld in m.get("partition_spec", []):
             if fld["source"] in df.columns:
                 df = df.withColumn(f"_p_{fld['name']}",
                                    _partition_value(fld).cast("string"))
@@ -265,7 +395,7 @@ class SnapshotTable:
             # stay IN the data files, so reads need no metadata re-attach
             w = w.partitionBy(*pnames)
         w.parquet(staged)
-        return staged
+        return staged, written
 
 
 
@@ -278,22 +408,23 @@ class SnapshotTable:
         if t.versions():
             raise FileExistsError(f"snapshot table already exists at {path}")
         os.makedirs(t.path, exist_ok=True)
-        names, fps = t._ingest_staged(t._stage(df), collect_partitions=True)
-        t._commit(names, "create",
-                  extra={"new_file_partitions": fps} if fps else None)
+        names, fps, written = t._write(df)
+        t._commit(names, "create", extra={"schema": written.jsonValue(),
+                                          "new_file_partitions": fps})
         return t
 
-    def read(self, spark: SparkSession, version: Optional[int] = None,
-             merge_schema: bool = True) -> DataFrame:
+    def read(self, spark: SparkSession,
+             version: Optional[int] = None) -> DataFrame:
         """The table as of ``version`` (latest when None) — time travel.
 
-        ``merge_schema=True`` gives additive schema evolution (Iceberg
-        add-column): an append may carry new columns, and older files read
-        them as NULL.  A version whose files predate the column doesn't
-        show it — evolution is part of history.  (Iceberg resolves the
-        schema from table metadata instead of file footers; over plain
-        parquet the footer union is the equivalent, at a small
-        footer-read cost per file.)
+        The files are read with the schema stored in the manifest, as
+        Iceberg resolves a scan's schema from table metadata, so building
+        the DataFrame reads no footer and starts no Spark job.  That
+        schema is the union of what the commits wrote, which gives
+        additive schema evolution (Iceberg add-column): an append may
+        carry new columns, and older files read them as NULL.  A version
+        whose files predate the column doesn't show it — evolution is part
+        of history.
 
         Manifest ``schema_ops`` (ALTER TABLE history) are applied on top:
         adds project a typed NULL until data carries the column, renames
@@ -303,24 +434,20 @@ class SnapshotTable:
         hide the column.  Ops are per-version: time travel to a
         pre-ALTER snapshot sees the old schema."""
         m = self._manifest(version)
-        df = (spark.read.option("mergeSchema", str(merge_schema).lower())
-              .parquet(*[os.path.join(self.path, f) for f in m["files"]]))
-        return _project_schema(df, m.get("schema_ops", []))
+        return self._scan(spark, m)
 
     # -- schema evolution (ALTER TABLE) -------------------------------------
 
     def _alter(self, spark: SparkSession, op: Dict) -> int:
         m = self._manifest()
-        cols = self.read(spark).columns
+        cols = self.schema(spark).names
         kind = op["op"]
         if kind == "add":
             if op["name"] in cols:
                 raise ValueError(f"column {op['name']!r} already exists")
-            # if any live file still carries the (previously dropped) name,
+            # if the file set still carries the (previously dropped) name,
             # new data must be written under a fresh physical name
-            raw = spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, f) for f in m["files"]])
-            if op["name"] in raw.columns:
+            if op["name"] in self._scan_physical(spark, m).columns:
                 op = dict(op, physical=f"{op['name']}__g{m['version'] + 1}")
         if kind == "rename":
             if op["from"] not in cols:
@@ -398,35 +525,32 @@ class SnapshotTable:
         files = self.pruned_files(equality, version)
         if not files:
             return self.read(spark, version).limit(0)
-        df = spark.read.option("mergeSchema", "true").parquet(*files)
-        return _project_schema(df, m.get("schema_ops", []))
+        return self._scan(spark, m, files)
 
     def overwrite(self, spark: SparkSession, df: DataFrame) -> int:
         """Full-table overwrite as ONE snapshot commit (Iceberg
         ``INSERT OVERWRITE``): the new files replace every live file; the
         previous snapshot stays readable via time travel until expired."""
-        added, fps = self._ingest_staged(self._stage(df),
-                                         collect_partitions=True)
+        added, fps, written = self._write(df)
         m = self._manifest()
         return self._commit(added, "overwrite", base_version=m["version"],
-                            extra={"new_file_partitions": fps} if fps else None)
+                            extra={"schema": written.jsonValue(),
+                                   "new_file_partitions": fps})
 
     def append(self, spark: SparkSession, df: DataFrame,
                max_retries: int = 5, _extra: Optional[Dict] = None) -> int:
         """Append commutes with any concurrent commit, so a conflict is
         rebased automatically: re-read the (new) live file list and retry
         the commit — the staged data files are written exactly once."""
-        added, fps = self._ingest_staged(self._stage(df),
-                                         collect_partitions=True)
+        added, fps, written = self._write(df)
         for attempt in range(max_retries + 1):
             m = self._manifest()
             try:
-                extra = dict(_extra or {})
-                if fps:
-                    extra["new_file_partitions"] = fps
                 return self._commit(m["files"] + added, "append",
                                     base_version=m["version"],
-                                    extra=extra or None)
+                                    extra={**(_extra or {}),
+                                           "new_file_partitions": fps},
+                                    written=written)
             except CommitConflictError:
                 if attempt == max_retries:
                     raise
@@ -462,10 +586,7 @@ class SnapshotTable:
         untouched files are *shared* with the previous snapshot."""
         pred = _to_col(predicate)
         m = self._manifest()
-        ops = m.get("schema_ops", [])
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        df = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*live), ops)
+        df = self._scan(spark, m)
         unknown = set(assignments) - set(df.columns)
         if unknown:
             raise ValueError(f"UPDATE SET references unknown column(s) "
@@ -477,38 +598,35 @@ class SnapshotTable:
             .filter(pred).select("_f").distinct(), "update")
         if not touched:
             return {"version": m["version"], "files_rewritten": 0}
-        sub = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*touched), ops)
+        sub = self._scan(spark, m, touched)
         updated = sub.select(*[
             (F.when(pred, _to_col(assignments[c]).cast(sub.schema[c].dataType))
              .otherwise(F.col(c))).alias(c) if c in assignments else F.col(c)
             for c in sub.columns])
-        added = self._ingest_staged(self._stage(updated))
+        added, _, written = self._write(updated)
         touched_names = {os.path.basename(f) for f in touched}
         kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "update", base_version=m["version"])
+        v = self._commit(kept + added, "update", base_version=m["version"],
+                         written=written)
         return {"version": v, "files_rewritten": len(touched)}
 
     def delete_where(self, spark: SparkSession, predicate) -> dict:
         pred = _to_col(predicate)
         m = self._manifest()
-        ops = m.get("schema_ops", [])
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        df = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*live), ops)
+        df = self._scan(spark, m)
         from .dml import bounded_file_list
         touched = bounded_file_list(
             df.withColumn("_f", F.input_file_name())
             .filter(pred).select("_f").distinct(), "delete")
         if not touched:
             return {"version": m["version"], "files_rewritten": 0}
-        sub = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*touched), ops)
+        sub = self._scan(spark, m, touched)
         kept_rows = sub.filter(~pred | pred.isNull())
-        added = self._ingest_staged(self._stage(kept_rows))
+        added, _, written = self._write(kept_rows)
         touched_names = {os.path.basename(f) for f in touched}
         kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "delete", base_version=m["version"])
+        v = self._commit(kept + added, "delete", base_version=m["version"],
+                         written=written)
         return {"version": v, "files_rewritten": len(touched)}
 
     def merge_into(self, spark: SparkSession, source: DataFrame, on: str,
@@ -525,10 +643,7 @@ class SnapshotTable:
         cardinality rules, and matched/inserted row counts ride the rewrite
         job as ``Observation`` metrics (no second scan)."""
         m = self._manifest()
-        ops = m.get("schema_ops", [])
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        target = _project_schema(
-            spark.read.option("mergeSchema", "true").parquet(*live), ops)
+        target = self._scan(spark, m)
         cols = target.columns
         update_cols = update_cols or [c for c in cols if c != on]
         unknown = set(update_cols) - set(cols)
@@ -556,15 +671,16 @@ class SnapshotTable:
         parts = []
         obs_u = obs_i = None
         if touched:
-            sub = _project_schema(
-                spark.read.option("mergeSchema", "true").parquet(*touched),
-                ops)
+            sub = self._scan(spark, m, touched)
             joined = sub.join(src, sub[on] == src[f"_src_{on}"], "left")
             obs_u = Observation()
             joined = joined.observe(obs_u,
                                     F.count(F.col(f"_src_{on}")).alias("n"))
+            # assignments take the table column's type, as in SQL MERGE:
+            # a wider source type must not change the table's schema
             parts.append(joined.select(*[
-                (F.when(F.col(f"_src_{on}").isNotNull(), F.col(f"_src_{c}"))
+                (F.when(F.col(f"_src_{on}").isNotNull(),
+                        F.col(f"_src_{c}").cast(target.schema[c].dataType))
                  .otherwise(F.col(c))).alias(c)
                 if c in update_cols and f"_src_{c}" in joined.columns
                 else F.col(c)
@@ -578,7 +694,7 @@ class SnapshotTable:
                 # null-fill target columns the source lacks — the table's
                 # schema must not drift per-file on insert
                 .select(*[(F.col(f"_src_{c}") if f"_src_{c}" in src.columns
-                           else F.lit(None).cast(target.schema[c].dataType))
+                           else F.lit(None)).cast(target.schema[c].dataType)
                           .alias(c) for c in cols]))
         if not parts:
             return {"version": m["version"], "files_rewritten": 0,
@@ -587,10 +703,11 @@ class SnapshotTable:
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
-        added = self._ingest_staged(self._stage(out))
+        added, _, written = self._write(out)
         touched_names = {os.path.basename(f) for f in touched}
         kept = [f for f in m["files"] if f not in touched_names]
-        v = self._commit(kept + added, "merge", base_version=m["version"])
+        v = self._commit(kept + added, "merge", base_version=m["version"],
+                         written=written)
         return {"version": v, "files_rewritten": len(touched),
                 "rows_updated": obs_u.get["n"] if obs_u else 0,
                 "rows_inserted": obs_i.get["n"] if obs_i else 0}
@@ -613,10 +730,13 @@ class SnapshotTable:
                     "files_written": 0}
         total = sum(sizes[f] for f in small)
         n_out = max(1, -(-total // target_file_bytes))  # ceil
-        df = spark.read.parquet(*[os.path.join(self.path, f) for f in small])
-        added = self._ingest_staged(self._stage(df.repartition(n_out)))
-        kept = [f for f in m["files"] if f not in set(small)]
-        v = self._commit(kept + added, "compact", base_version=m["version"])
+        df = self._scan_physical(
+            spark, m, [os.path.join(self.path, f) for f in small])
+        added, _, written = self._write(df.repartition(n_out))
+        small = set(small)
+        kept = [f for f in m["files"] if f not in small]
+        v = self._commit(kept + added, "compact", base_version=m["version"],
+                         written=written)
         return {"version": v, "files_compacted": len(small),
                 "files_written": len(added)}
 
@@ -632,21 +752,21 @@ class SnapshotTable:
         from ..sources.layout import zorder_value
 
         m = self._manifest()
-        live = [os.path.join(self.path, f) for f in m["files"]]
-        df = spark.read.parquet(*live)
+        df = self._scan_physical(spark, m)
         stats = df.agg(*[F.min(c).alias(f"lo_{i}") for i, c in enumerate(cols)],
                        *[F.max(c).alias(f"hi_{i}") for i, c in enumerate(cols)]
                        ).collect()[0]
         mins = [stats[f"lo_{i}"] for i in range(len(cols))]
         maxs = [stats[f"hi_{i}"] for i in range(len(cols))]
         z = zorder_value([F.col(c) for c in cols], mins, maxs, bits)
-        n_out = n_files or len(live)
+        n_out = n_files or len(m["files"])
         out = (df.withColumn("_z", z)
                .repartitionByRange(n_out, "_z")
                .sortWithinPartitions("_z")
                .drop("_z"))
-        added = self._ingest_staged(self._stage(out))
-        v = self._commit(added, "zorder", base_version=m["version"])
+        added, _, written = self._write(out)
+        v = self._commit(added, "zorder", base_version=m["version"],
+                         written=written)
         return {"version": v, "files_written": len(added)}
 
     # -- metadata tables (Iceberg's  t.history / t.files  surface) ----------
@@ -689,18 +809,17 @@ class SnapshotTable:
         m_to = self._manifest(v_to)
         only_from = sorted(set(m_from["files"]) - set(m_to["files"]))
         only_to = sorted(set(m_to["files"]) - set(m_from["files"]))
-        schema_to = m_to.get("schema_ops", [])
 
-        def read_files(names, ops):
+        def read_files(names, m):
             if not names:
                 return None
-            df = (spark.read.option("mergeSchema", "true")
-                  .parquet(*[os.path.join(self.path, f) for f in names]))
-            return _project_schema(df, ops)
+            return self._scan(spark, m,
+                              [os.path.join(self.path, f) for f in names])
 
-        old = read_files(only_from, m_from.get("schema_ops", []))
-        new = read_files(only_to, schema_to)
-        empty = self.read(spark, v_to).limit(0)                     .withColumn("_change_type", F.lit(""))
+        old = read_files(only_from, m_from)
+        new = read_files(only_to, m_to)
+        empty = self.read(spark, v_to).limit(0) \
+            .withColumn("_change_type", F.lit(""))
         out = empty
         if new is not None:
             ins = new if old is None else new.exceptAll(
@@ -726,7 +845,8 @@ class SnapshotTable:
         base = self._manifest()["version"]
         return self._commit(target["files"], f"rollback-to-{version}",
                             base_version=base,
-                            extra={"schema_ops": target.get("schema_ops", [])})
+                            extra={"schema_ops": target.get("schema_ops", []),
+                                   "schema": target.get("schema")})
 
     # ---- named refs (branches / tags) --------------------------------
     # Iceberg refs are mutable table-level pointers into the snapshot log
@@ -823,8 +943,8 @@ class SnapshotTable:
         base = self._manifest()["version"]
         return self._commit(target["files"], f"set-current-to-{version}",
                             base_version=base,
-                            extra={"schema_ops":
-                                   target.get("schema_ops", [])})
+                            extra={"schema_ops": target.get("schema_ops", []),
+                                   "schema": target.get("schema")})
 
     def cherrypick(self, version: int) -> int:
         """Apply ``version``'s delta against its parent onto the CURRENT
@@ -837,13 +957,20 @@ class SnapshotTable:
         idx = vs.index(version)
         parent = (set(self._manifest(vs[idx - 1])["files"])
                   if idx > 0 else set())
-        target = set(self._manifest(version)["files"])
+        m_target = self._manifest(version)
+        target = set(m_target["files"])
         added, removed = target - parent, parent - target
         cur = self._manifest()
         new_files = ([f for f in cur["files"] if f not in removed]
                      + sorted(added - set(cur["files"])))
+        schema = None
+        if "schema" in cur and "schema" in m_target:
+            schema = _merge_types(StructType.fromJson(cur["schema"]),
+                                  StructType.fromJson(m_target["schema"])
+                                  ).jsonValue()
         return self._commit(new_files, f"cherrypick-{version}",
-                            base_version=cur["version"])
+                            base_version=cur["version"],
+                            extra={"schema": schema})
 
     def remove_orphans(self,
                        older_than_seconds: float = 3 * 24 * 3600) -> dict:

@@ -149,13 +149,32 @@ def test_detail_default_path_is_collision_safe(monkeypatch, tmp_path):
 
     monkeypatch.chdir(tmp_path)
     monkeypatch.delenv("SPARK_GRAFT_BENCH_DETAIL", raising=False)
-    # reproduce main()'s default-path derivation (no Spark run needed)
-    import time as _t
-    stamp = _t.strftime("%Y%m%dT%H%M%S", _t.gmtime())
-    default = os.path.join(
-        os.getcwd(), f"bench_detail.{stamp}-{os.getpid()}.json")
+    default = bench._detail_path()
     tracked = os.path.join(
         os.path.dirname(os.path.abspath(bench.__file__)),
         "bench_detail.json")
+    assert os.path.dirname(default) == str(tmp_path)
     assert os.path.abspath(default) != tracked
     assert os.path.basename(default) != "bench_detail.json"
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_DETAIL", "elsewhere/d.json")
+    assert bench._detail_path() == str(tmp_path / "elsewhere" / "d.json")
+
+
+def test_suite_spread_keeps_zero_totals():
+    """A 0.0 suite total is a value, not a missing one: it counts toward
+    the two-total minimum, and a zero minimum gives no ratio instead of
+    dividing by zero."""
+    assert bench._suite_spread([0.0, 5.0]) is None
+    assert bench._suite_spread([0.0, 0.0]) is None
+    assert bench._suite_spread([None, 6.0]) is None
+    assert bench._suite_spread([4.0, None, 6.0]) == 1.5
+
+
+def test_record_stores_full_detail_path():
+    """The record line locates its detail file even when the file is not
+    in the cwd: main() stores _detail_path()'s absolute path as is."""
+    import inspect
+
+    src = inspect.getsource(bench.main)
+    assert "detail_path = _detail_path()" in src
+    assert '"detail": detail_path,' in src

@@ -146,6 +146,21 @@ def test_merge_no_insert_clause(spark, table):
     assert table.read(spark).count() == 100
 
 
+def test_merge_casts_source_values_to_table_types(spark, tmp_path):
+    """MERGE assignments take the target column's type: a wider source
+    type changes neither the table's schema nor its readability."""
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), spark.range(
+        0, 10).select(F.col("id"), F.col("id").cast("int").alias("n"))
+        .repartition(2))
+    src = spark.range(5, 15).select(F.col("id"), (F.col("id") * 10).alias("n"))
+    r = t.merge_into(spark, src, on="id")
+    assert (r["rows_updated"], r["rows_inserted"]) == (5, 5)
+    df = t.read(spark)
+    assert df.schema["n"].dataType.simpleString() == "int"
+    assert {(row.id, row.n) for row in df.collect()} == (
+        {(i, i) for i in range(5)} | {(i, i * 10) for i in range(5, 15)})
+
+
 def test_stale_base_commit_conflicts(spark, table):
     from sedona_iceberg_extension_spark.operators.snapshots import (
         CommitConflictError)
@@ -396,3 +411,194 @@ def test_changes_changelog_between_snapshots(spark, tmp_path):
     # self-diff is empty
     v_now = t.versions()[-1]
     assert t.changes(spark, v_now, v_now).count() == 0
+
+
+# -- the manifest's stored schema ---------------------------------------------
+
+def _tag_batch(spark):
+    """Ten rows that carry a column the fixture table lacks."""
+    return spark.range(100, 110).select(
+        F.col("id"), (F.col("id") % 10).alias("grp"),
+        (F.col("id") * 1.5).alias("val"), F.lit("new").alias("tag"))
+
+
+def _rows(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _assert_schema_matches_files(spark, t):
+    """The stored schema equals parquet schema merging over the manifest's
+    files (as a name -> type map), and read() returns the rows of a read
+    that infers the schema from the footers."""
+    from pyspark.sql.types import StructType
+
+    from sedona_iceberg_extension_spark.operators.snapshots import (
+        _project_schema)
+
+    m = t._manifest()
+    stored = StructType.fromJson(m["schema"])
+    inferred = spark.read.option("mergeSchema", "true").parquet(*t.files())
+    assert ({f.name: f.dataType for f in stored.fields}
+            == {f.name: f.dataType for f in inferred.schema.fields}), \
+        m["operation"]
+    got = t.read(spark)
+    ref = _project_schema(inferred, m.get("schema_ops", []))
+    assert sorted(got.columns) == sorted(ref.columns), m["operation"]
+    assert _rows(got) == _rows(ref.select(*got.columns)), m["operation"]
+
+
+def test_rewrites_keep_a_column_only_some_files_carry(spark, tmp_path):
+    """Compaction and Z-order rewrites read the table's whole schema: a
+    column that only the appended file carries survives the rewrite with
+    its values.  (Read from one file's footer, the rewrite dropped it on
+    some file orders, so the test runs on several fresh tables.)"""
+    for i in range(8):
+        t = SnapshotTable.create(spark, str(tmp_path / f"t{i}"), spark.range(
+            0, 100).select(F.col("id"), (F.col("id") % 10).alias("grp"),
+                           (F.col("id") * 1.5).alias("val")).repartition(
+            4, "grp"))
+        v_append = t.append(spark, _tag_batch(spark))
+        for rewrite in (lambda: t.rewrite_zorder(spark, ["id", "val"]),
+                        lambda: t.compact(spark, target_file_bytes=1 << 30)):
+            # both rewrites start from the appended, mixed-schema file set
+            t.rollback(v_append)
+            rewrite()
+            df = t.read(spark)
+            assert "tag" in df.columns, (i, t._manifest()["operation"])
+            assert df.filter("tag = 'new'").count() == 10
+            assert df.count() == 110
+
+
+def test_stored_schema_equals_footer_merge_through_every_commit(
+        spark, tmp_path):
+    """Every commit kind stores the schema that merging its files' footers
+    would give, and reads return the same rows as such an inferring read."""
+    base = spark.range(0, 100).select(
+        F.col("id"), (F.col("id") % 10).alias("grp"),
+        (F.col("id") * 1.5).alias("val"))
+    t = SnapshotTable.create(spark, str(tmp_path / "t"),
+                             base.repartition(4, "grp"))
+    _assert_schema_matches_files(spark, t)
+    t.add_partition_field("grp")
+    _assert_schema_matches_files(spark, t)
+    t.append(spark, _tag_batch(spark))
+    _assert_schema_matches_files(spark, t)
+    t.update_where(spark, {"val": "val + 1000"}, "grp = 3")
+    _assert_schema_matches_files(spark, t)
+    t.delete_where(spark, "grp = 4")
+    _assert_schema_matches_files(spark, t)
+    v_merge = t.merge_into(spark, spark.range(95, 115).select(
+        F.col("id"), (F.col("id") % 10).alias("grp"),
+        (F.col("id") * 2.0).alias("val"), F.lit("m").alias("tag")),
+        on="id")["version"]
+    _assert_schema_matches_files(spark, t)
+    t.compact(spark, target_file_bytes=1 << 30)
+    _assert_schema_matches_files(spark, t)
+    v_zorder = t.rewrite_zorder(spark, ["id", "val"])["version"]
+    _assert_schema_matches_files(spark, t)
+    t.add_column(spark, "score", "DOUBLE")
+    t.rename_column(spark, "val", "value")
+    t.drop_column(spark, "tag")
+    _assert_schema_matches_files(spark, t)
+    assert t.read(spark).columns == ["id", "grp", "value", "score"]
+    v_narrow = t.overwrite(spark, spark.range(0, 5).select(
+        F.col("id"), F.lit(1).cast("bigint").alias("grp")))
+    _assert_schema_matches_files(spark, t)
+    t.rollback(v_zorder)
+    _assert_schema_matches_files(spark, t)
+    t.set_current(v_merge)
+    _assert_schema_matches_files(spark, t)
+    t.cherrypick(v_narrow)
+    _assert_schema_matches_files(spark, t)
+    t.expire(keep_last=2)
+    _assert_schema_matches_files(spark, t)
+
+
+def test_read_and_register_start_no_spark_job(spark, tmp_path):
+    """Building a snapshot table's DataFrame, at any version, and
+    registering its view plan from the manifest: no footer-merge job."""
+    from sedona_iceberg_extension_spark.operators import ddl
+
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), spark.range(
+        0, 100).select(F.col("id"), (F.col("id") % 10).alias("grp"))
+        .repartition(4, "grp"))
+    t.append(spark, spark.range(100, 110).select(
+        F.col("id"), (F.col("id") % 10).alias("grp"), F.lit("x").alias("tag")))
+    t.rename_column(spark, "grp", "g")
+    t.update_where(spark, {"tag": "'y'"}, "g = 3")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(None, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group))
+
+    # the counter sees the job an inferring read starts
+    assert jobs(lambda: spark.read.option("mergeSchema", "true").parquet(
+        *t.files()), "snap_nojobs_control") >= 1
+    for v in t.versions():
+        assert jobs(lambda: t.read(spark, v), f"snap_nojobs_v{v}") == 0, v
+        assert jobs(lambda: t.schema(spark, v), f"snap_nojobs_s{v}") == 0, v
+    ddl.reset(spark)
+    try:
+        ddl._catalog(spark)["nojobs_t"] = t
+        assert jobs(lambda: ddl._register(spark, "nojobs_t"),
+                    "snap_nojobs_register") == 0
+        assert spark.table("nojobs_t").count() == 110
+    finally:
+        ddl.reset(spark)
+
+
+def test_manifest_without_schema_still_reads(spark, table):
+    """A manifest written before manifests stored a schema reads by merging
+    its files' footers; commits on top of it stay schema-less and correct."""
+    import json
+
+    table.append(spark, _tag_batch(spark))
+    for v in table.versions():
+        path = os.path.join(table.snap_dir, f"v{v}.json")
+        with open(path) as fh:
+            m = json.load(fh)
+        del m["schema"]
+        with open(path, "w") as fh:
+            json.dump(m, fh)
+    df = table.read(spark)
+    assert df.count() == 110 and df.filter("tag = 'new'").count() == 10
+    assert "tag" not in table.read(spark, version=1).columns
+    assert [f.name for f in table.schema(spark)] == df.columns
+    table.update_where(spark, {"val": "0.0"}, "grp = 1")
+    table.compact(spark, target_file_bytes=1 << 30)
+    assert "schema" not in table._manifest()
+    df = table.read(spark)
+    assert df.count() == 110 and df.filter("tag = 'new'").count() == 10
+    assert df.filter("grp = 1 AND val != 0.0").count() == 0
+
+
+def test_append_with_conflicting_type_raises(spark, table):
+    """An append whose column type conflicts with the table's raises at
+    commit, as parquet schema merging would on the next read."""
+    bad = spark.range(0, 5).select(
+        F.col("id"), (F.col("id") % 10).alias("grp"),
+        F.lit("text").alias("val"))
+    with pytest.raises(ValueError, match="incompatible types.*val"):
+        table.append(spark, bad)
+    assert table.versions() == [1]
+    assert table.read(spark).count() == 100
+
+
+def test_rename_keeps_column_position_through_rewrites(spark, table):
+    """After RENAME, a copy-on-write rewrite writes the new name; the
+    column still reads in its old position, so positional INSERTs keep
+    lining up."""
+    table.rename_column(spark, "grp", "g")
+    table.update_where(spark, {"val": "0.0"}, "g = 1")
+    assert table.read(spark).columns == ["id", "g", "val"]
+    assert [f.name for f in table.schema(spark)] == ["id", "g", "val"]
+    assert table.read(spark).filter("g = 1").count() == 10
